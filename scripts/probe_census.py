@@ -31,7 +31,7 @@ def main() -> None:
     import tstables_spark.plans.analytics as A
     from tstables_spark.plans.tables import load
     from tstables_spark.plans._portable_sql import epoch_floor_div
-    from tstables_spark.plans._staging import wide_initial_partitions
+    from tstables_spark.plans._staging import pin, wide_initial_partitions
 
     import bench
 
@@ -70,7 +70,7 @@ def main() -> None:
     # phase 1: sampled-edge pin (derive + stage the scratch table)
     se = timed(
         "se_pin",
-        lambda: A._edge_pin(
+        lambda: pin(
             A._doulion_sample(A.cooccurrence_edges(b0, cap=256), CUT),
             True,
             "doulion_se",
@@ -101,7 +101,7 @@ def main() -> None:
         )
     )
     oe = timed(
-        "oe_pin", lambda: A._edge_pin(oe0, True, "census_oe", cache_key=ck)
+        "oe_pin", lambda: pin(oe0, True, "census_oe", cache_key=ck)
     )
 
     # phase 3: wedge expansion alone (current self-join shape), noop sink

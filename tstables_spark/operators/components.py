@@ -154,12 +154,11 @@ def connected_components(
         # per-round edge cost to a pure cache scan: no Exchange —
         # sym's persisted HashPartitioning(a) satisfies the join — and
         # no Sort). Small path: the plain r16 join, AQE-coalesced.
+        lab_side = labels.alias("lab")
         if big:
-            lab_side = labels.hint("shuffle_hash")
+            lab_side = lab_side.hint("shuffle_hash")
         elif bcast_rounds:
-            lab_side = F.broadcast(labels)
-        else:
-            lab_side = labels
+            lab_side = F.broadcast(lab_side)
         # Broadcast path (r18): the pointer-doubling jump is the SAME
         # join shape as the neighbor step — "node x adopts the label
         # of p" is the neighbor rule over the pointer edge (p, x) — so
@@ -173,7 +172,10 @@ def connected_components(
         # identical by construction. Big path keeps the two-join
         # shape: its stream side is the hash-partitioned edge cache,
         # and a union with the O(V) pointer rows would break the
-        # partitioning match that keeps rounds exchange-free.
+        # partitioning match that keeps rounds exchange-free. Both
+        # sides are aliased: the pointer rows derive from ``labels``,
+        # so unqualified column references would lean on Spark's
+        # self-join deduplication to tell the two legs apart.
         stream = sym
         if bcast_rounds and i > 0:
             stream = sym.union(
@@ -182,8 +184,9 @@ def connected_components(
                 )
             )
         nbr = (
-            stream.join(lab_side, stream.a == lab_side.node)
-            .select(F.col("b").alias("node"), "component")
+            stream.alias("s")
+            .join(lab_side, F.col("s.a") == F.col("lab.node"))
+            .select(F.col("s.b").alias("node"), F.col("lab.component"))
         )
         cand = labels.select("node", "component").union(nbr)
         # pointer doubling (path halving): also adopt the label OF my

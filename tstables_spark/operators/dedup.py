@@ -344,7 +344,9 @@ def minhash_lsh_pairs(
 
     ``cache_key``: optional identity of ``docs`` (e.g. the sf_dir) —
     lets the big-corpus path reuse its streamed scratch tables across
-    invocations (the _PR_EDGES_STAGED discipline; see _MINHASH_PIN_ROWS_MAX)."""
+    invocations (see _MINHASH_PIN_ROWS_MAX)."""
+    from tstables_spark.plans._staging import is_stream_pinned, pin
+
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     # Physical-strategy knob BEFORE any data-sized materialization (the
@@ -356,17 +358,13 @@ def minhash_lsh_pairs(
     # cache_key, the big verdict is implied and the estimate scan (a
     # full docs pass) is skipped — the repeat-invocation path the cache
     # exists for must not re-scan the corpus just to re-derive `big`.
-    big = False
-    if cache_key is not None:
-        from tstables_spark.plans._staging import _STREAM_PINNED
+    def ck(extra: tuple) -> tuple | None:
+        return None if cache_key is None else cache_key + extra
 
-        app = docs.sparkSession.sparkContext.applicationId
-        # full _STREAM_PINNED key shape: (app, prefix, cache_key,
-        # bucket_by, num_buckets) — these pins are unbucketed
-        big = all(
-            (app, p, cache_key + extra, None, None) in _STREAM_PINNED
-            for p, extra in (("mh_sh", (n,)), ("mh_sig", (n, num_hashes)))
-        )
+    big = cache_key is not None and all(
+        is_stream_pinned(docs.sparkSession, p, ck(extra))
+        for p, extra in (("mh_sh", (n,)), ("mh_sig", (n, num_hashes)))
+    )
     if not big:
         sh_rows_est = docs.agg(
             F.sum(
@@ -376,16 +374,6 @@ def minhash_lsh_pairs(
             ).alias("s")
         ).collect()[0]["s"]  # 1-row contract-bounded collect
         big = (sh_rows_est or 0) > _MINHASH_PIN_ROWS_MAX
-
-    def _pin(df: DataFrame, prefix: str, key_extra: tuple) -> DataFrame:
-        if not big:
-            return df.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-        from tstables_spark.plans._staging import stream_pin
-
-        ck = None if cache_key is None else cache_key + key_extra
-        return stream_pin(df, prefix, cache_key=ck)
 
     # Materialize the shingle set ONCE — as 60-bit portable fingerprints,
     # not strings. Three branches read it (the signature aggregate and
@@ -413,16 +401,15 @@ def minhash_lsh_pairs(
     # (SCALE.md r11); on a cluster the same sizing rule decides
     # whether an executor's slice fits its storage fraction. Above
     # _MINHASH_PIN_ROWS_MAX even the serialized pin rides the heap
-    # envelope (the r12 63-76 s GC-luck cluster) — _pin streams it
+    # envelope (the r12 63-76 s GC-luck cluster) — pin streams it
     # into a scratch table instead.
-    from pyspark import StorageLevel
-
-    sh = _pin(
+    sh = pin(
         shingles(docs, n, with_size=True).select(
             "doc_id", "n_sh", portable_hash60("shingle").alias("h")
         ),
+        big,
         "mh_sh",
-        (n,),
+        cache_key=ck((n,)),
     )
     # k hash functions from ONE portable base hash + k affine maps (see
     # portable_hash60): k codegen'd integer ops on the checkpointed
@@ -454,12 +441,13 @@ def minhash_lsh_pairs(
     # (SCALE.md r11). The accurate post-pin stats also let the planner
     # judge the self-join and verify joins from real sizes instead of
     # guessing under the duplicated-subtree estimate.
-    sig = _pin(
+    sig = pin(
         hashed.groupBy("doc_id").agg(
             *[F.min(f"h{i}").alias(f"m{i}") for i in range(num_hashes)],
         ),
+        big,
         "mh_sig",
-        (n, num_hashes),
+        cache_key=ck((n, num_hashes)),
     )
     # Band key = the band's minhash tuple rendered as a string — an
     # engine-neutral join key (the previous xxhash64-of-band-columns key

@@ -30,114 +30,46 @@ def _load_all() -> None:
         llm,
     )
 
-    # ROUND-17 verification window (first 50 = the harness's
-    # correctness window). Priority per the STANDING ROTATION POLICY
-    # (below):
-    # (a) the reference-identity pair, pinned permanently;
-    # (b) NEW queries: none (coverage complete since r14);
-    # (c) re-check slots for r17 behavioral changes, per module:
-    #     - session.py/_staging.py: the AQE initialPartitionNum trade
-    #       INVERTED (global flat; census rides the x8 twin) -> every
-    #       former flat-twin rider (dedup_near, dedup_near_maxdf,
-    #       dedup_containment, dedup_substring, dedup_clusters,
-    #       dedup_cluster_sizes, graph_degree_dist, graph_jaccard)
-    #       and the new twin riders (graph_triangles,
-    #       graph_triangles_approx, graph_triangles_gate);
-    #     - plans/analytics.py: cooccurrence_edges rebuilt as ONE
-    #       groupBy-bucket aggregate + posexplode suffix generation
-    #       (the _pair_overlap discipline; the window+self-join and
-    #       the membership checkpoint are gone) -> every edge
-    #       consumer: the graph_* eight above + graph_pagerank,
-    #       graph_kcore;
-    #     - operators/components.py: the symmetric edge list persists
-    #       once hash-partitioned, rounds build SHUFFLE_HASH on the
-    #       labels side -> dedup_clusters, dedup_cluster_sizes,
-    #       dedup_embed_clusters;
-    #     - operators/dedup.py: _pack_doc_nsh forced to long
-    #       arithmetic (ADVICE) -> dedup_minhash (+ the _pair_overlap
-    #       consumers above);
-    #     - operators/packing.py: the cumsum offsets became an
-    #       element_at array literal (the Python-local-relation tax,
-    #       36.7 of ts_robust_zscore's 41.7 s task) ->
-    #       ts_robust_zscore, drift_ks_test, agg_winsorize,
-    #       agg_qsketch_quantiles, win_distribution, pack_sequences,
-    #       vocab_coverage_curve (+ graph_kcore above);
-    #     - _local.py (new): driver-built relations as JVM
-    #       LocalRelations -> ts_catalog, agg_kll_gate,
-    #       stream_kll_gate, agg_heavy_hitters, stream_heavy_hitters,
-    #       bpe_train_merges, bpe_encode, sim_recall, embed_pca_power
-    #       (sim_range_search's LSH probes ride (d) below; the
-    #       sim_ivf*/ivfpq/nsw centroid/LUT/probe relations are
-    #       rows-only by design, gated by sim_recall here);
-    #     - streaming/replay.py: failed-attempt dir GC on retry
-    #       (ADVICE) -> stream_theta;
-    #     - plans/pipeline.py (late-r17): pipeline_corpus_funnel's
-    #       per-doc bigram/stopword signals moved into an Arrow
-    #       mapInPandas kernel (measured 1.20x at the 100x envelope;
-    #       lower()/md5/keep_q arithmetic stay JVM-side) ->
-    #       pipeline_corpus_funnel, displacing sink_orc_roundtrip
-    #       from the (e) backfill (its evidence stays r10, so the
-    #       "oldest >= r10" outcome is unchanged; changed-query
-    #       re-checks take precedence over backfill per the policy);
-    #       graph_triangles_approx's big-path census broadcast gate
-    #       (late-r17) already holds a (c) slot above;
-    #     - registry.py/_staging.py: pin refcounts transfer to the
-    #       returned frame's lifetime -> dedup_minhash (big-path
-    #       pins), graph_pagerank (bucketed pin) above;
-    # (d) the ENTIRE 11-query r9 cohort (oldest evidence, promised to
-    #     head this window by the r16 note): join_semi,
-    #     multimodal_frames, pareto_frontier, set_intersect,
-    #     set_union, sim_matryoshka, sim_range_search, sort_limit,
-    #     token_ngram_novelty, topk_per_group, vocab_growth;
-    # (e) next-oldest backfill to the 50 cut: five r10-latest entries
-    #     (forecast_naive_eval, agg_linear_regression, agg_qsketch,
-    #     join_bucketed, sink_orc_roundtrip). After this window the
-    #     oldest oracle-backed driver evidence is r10.
-    #
-    # STANDING ROTATION POLICY (r10+): window = pinned pair + any
-    # never-checked new queries + re-check slots for every query whose
-    # implementing module OR consumed helper changed since its last
-    # green row (check `git log -- <module>` against round markers —
-    # including helper modules like _staging/_local, the r10 blind
-    # spot), then backfill with oldest-evidence queries. The 7
-    # permanently rows-only-by-design queries are sim_ivf,
-    # sim_ivf_centroid, sim_ivf_kmeans, sim_nsw, sim_nsw_staged,
-    # sim_ivfpq, ts_downsample_lttb — each indirectly gated by a
-    # hash-checked contract query (sim_recall r13/r17, ts_lttb_gate
-    # r14). Everything displaced from this window is hash-green in a
-    # prior round with an unchanged implementation and covered by
-    # repo-local parity tests (tests/test_parity.py runs the full
-    # oracle differential every suite run).
+    # Verification window: the driver's correctness gate checks the
+    # FIRST 50 registered queries. Standing policy: the reference
+    # identity pair stays pinned first; then every query whose
+    # implementation, or any helper it consumes (_staging, _local,
+    # operators/*), changed since its last green driver row; then
+    # leftovers a previous rotation missed; then backfill with the
+    # oldest driver evidence. Rows-only queries count like any other.
+    # Everything displaced is hash-green in an earlier round with an
+    # unchanged implementation and is covered by tests/test_parity.py.
+    # Per-round reasoning lives in CHANGES.md.
     registry.prioritize(
         [
-            # (a) reference identity, pinned
+            # reference identity, pinned
             "ts_range_scan", "ts_min_max",
-            # (c) r17 behavioral-change re-checks (see policy note)
-            "dedup_near", "dedup_near_maxdf", "dedup_containment",
-            "dedup_substring", "dedup_clusters", "dedup_cluster_sizes",
-            "dedup_minhash", "dedup_embed_clusters",
-            "graph_degree_dist", "graph_jaccard", "graph_triangles",
+            # changed staging or pin path (stage_once, pin,
+            # _directed_edges, minhash pins, CC round alias, kn gate)
+            "scan_csv", "scan_json", "join_bucketed",
+            "join_asof_presorted", "join_asof_forward_presorted",
+            "join_asof_nearest_presorted", "join_asof_tolerance_presorted",
+            "join_asof_epochs", "join_asof_multi_presorted",
+            "ts_epoch_lifecycle", "ts_epoch_recovery",
+            "sim_nsw_staged", "sim_recall",
+            "stream_append_windows", "stream_asof", "stream_bloom",
+            "stream_cms", "stream_dedup", "stream_enrich",
+            "stream_heavy_hitters", "stream_ingest", "stream_join",
+            "stream_kll_gate", "stream_ohlc", "stream_pattern",
+            "stream_qsketch", "stream_sliding", "stream_stateful",
+            "stream_tumbling",
+            "graph_pagerank", "graph_kcore", "graph_triangles",
             "graph_triangles_approx", "graph_triangles_gate",
-            "graph_pagerank", "graph_kcore",
-            "ts_robust_zscore", "drift_ks_test", "agg_winsorize",
-            "agg_qsketch_quantiles", "win_distribution",
-            "pack_sequences", "vocab_coverage_curve",
-            "ts_catalog", "agg_kll_gate", "stream_kll_gate",
-            "agg_heavy_hitters", "stream_heavy_hitters",
-            "bpe_train_merges", "bpe_encode", "sim_recall",
-            "embed_pca_power", "stream_theta", "pipeline_corpus_funnel",
-            # (d) the full r9 cohort (oldest evidence, x11)
-            "join_semi", "multimodal_frames", "pareto_frontier",
-            "set_intersect", "set_union", "sim_matryoshka",
-            "sim_range_search", "sort_limit", "token_ngram_novelty",
-            "topk_per_group", "vocab_growth",
-            # (e) r10 backfill to the cut (sink_orc_roundtrip displaced
-            # by the late-r17 funnel re-check; see the policy note)
-            "forecast_naive_eval", "agg_linear_regression",
-            "agg_qsketch", "join_bucketed",
+            "dedup_minhash", "dedup_clusters", "dedup_cluster_sizes",
+            "dedup_embed_clusters", "lm_kn_score",
+            # leftover from the previous rotation
+            "assoc_rules",
+            # oldest evidence backfill to the cut
+            "ts_create_append", "sink_parquet_partitioned", "ts_compact",
+            "ts_upsert", "ts_schema_evolve", "ts_partitions",
+            "ts_cross_rank", "ts_retention_purge",
         ]
     )
-
 
 
 _load_all()

@@ -7,6 +7,9 @@ staged catalog tables register a best-effort DROP — so repeated
 3-scale sweeps inside one session overwrite or reuse instead of
 accumulating orphan mkdtemp dirs and catalog entries.
 
+This is the only module that decides how a relation is staged once
+per application (``stage_once``) or pinned (``pin``: checkpoint or
+``stream_pin``); callers supply only the code that builds the layout.
 Kept in a private helper (not a plans module) so importing it never
 registers queries.
 """
@@ -17,6 +20,7 @@ import atexit
 import shutil
 import tempfile
 import threading
+import uuid
 
 _APP_ROOTS: dict[str, str] = {}
 
@@ -213,6 +217,31 @@ def _evict_stream_pins(spark, cap: int) -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _pin_key(spark, prefix, cache_key, bucket_by, num_buckets):
+    """(registry key, bucket count) of a stream pin. The layout knobs
+    are part of the relation's identity: a cached UNBUCKETED table
+    silently returned to a caller expecting the bucketed zero-exchange
+    scan regains the full corpus-sized shuffle with no error."""
+    nb = None
+    if bucket_by is not None:
+        nb = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    full_key = None
+    if cache_key is not None:
+        full_key = (
+            spark.sparkContext.applicationId, prefix, cache_key, bucket_by, nb
+        )
+    return full_key, nb
+
+
+def is_stream_pinned(spark, prefix: str, cache_key: tuple) -> bool:
+    """Whether an unbucketed ``stream_pin(df, prefix, cache_key)`` would
+    reuse a staged table. A pure membership probe: it neither refreshes
+    recency nor takes a reference."""
+    full_key, _ = _pin_key(spark, prefix, cache_key, None, None)
+    with _STREAM_PINNED_LOCK:
+        return full_key in _STREAM_PINNED
+
+
 def stream_pin(
     df,
     prefix: str,
@@ -231,23 +260,11 @@ def stream_pin(
     staged table is reused per (applicationId, prefix, cache_key).
     ``bucket_by``/``num_buckets``: optionally bucket the staged table
     so key-clustered consumers (a groupBy or shuffle-hash join on the
-    bucket key) read it with ZERO exchange — the graph_pagerank edge
-    layout, available to any caller."""
-    import uuid
-
+    bucket key) read it with ZERO exchange — the directed-edge layout
+    of graph_pagerank and graph_kcore."""
     spark = df.sparkSession
-    nb = None
-    if bucket_by is not None:
-        nb = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    full_key = None
-    if cache_key is not None:
-        # the layout knobs are part of the relation's identity: a
-        # cached UNBUCKETED table silently returned to a caller
-        # expecting the bucketed zero-exchange scan regains the full
-        # corpus-sized shuffle with no error (review r13)
-        full_key = (
-            spark.sparkContext.applicationId, prefix, cache_key, bucket_by, nb
-        )
+    full_key, nb = _pin_key(spark, prefix, cache_key, bucket_by, num_buckets)
+    if full_key is not None:
         with _STREAM_PINNED_LOCK:
             hit = _STREAM_PINNED.get(full_key)
             if hit is not None:
@@ -298,6 +315,52 @@ def stream_pin(
             return spark.table(winner[0])
         _evict_stream_pins(spark, _STREAM_PINNED_CAP)
     return spark.table(tag)
+
+
+def pin(
+    df,
+    big: bool,
+    prefix: str,
+    cache_key: tuple | None = None,
+    bucket_by: str | None = None,
+):
+    """Materialize a multiply-consumed relation: the one switch between
+    an eager serialized ``localCheckpoint`` (fast, memory-first; every
+    fixture scale) and ``stream_pin`` (constant-memory; the caller's
+    size gate said ``big``). ``cache_key`` and ``bucket_by`` only
+    apply to the streamed path."""
+    if not big:
+        from pyspark import StorageLevel
+
+        return df.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+    return stream_pin(df, prefix, cache_key=cache_key, bucket_by=bucket_by)
+
+
+# Layouts staged once per application: (applicationId, prefix, key) ->
+# whatever the build returned (a table tag or a path). Never evicted —
+# each entry is one fixture-sized layout a registered query re-reads on
+# every invocation, unlike the corpus-sized pins above.
+_STAGED_ONCE: dict = {}
+
+
+def stage_once(spark, prefix: str, key: tuple, build, tables=("",)):
+    """``build(tag, base)``'s result, built on the first call per
+    (application, prefix, key) and returned as-is afterwards.
+
+    ``tag`` is a fresh catalog name ``<prefix>_<8 hex>`` and ``base`` a
+    fresh ``scratch_dir``. After the build, ``tag + suffix`` is
+    registered for the at-exit DROP for every suffix in ``tables``;
+    pass ``()`` when the layout is a bare parquet path."""
+    full_key = (spark.sparkContext.applicationId, prefix, key)
+    if full_key not in _STAGED_ONCE:
+        tag = f"{prefix}_{uuid.uuid4().hex[:8]}"
+        result = build(tag, scratch_dir(spark, prefix + "_"))
+        for suffix in tables:
+            register_staged_table(spark, tag + suffix)
+        _STAGED_ONCE[full_key] = result
+    return _STAGED_ONCE[full_key]
 
 
 def register_staged_table(spark, table: str) -> None:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from tstables_spark.plans._exact import exact_sum, sql_sum
 from tstables_spark.plans.registry import query
 from tstables_spark.plans._portable_sql import epoch_floor_div
+from tstables_spark.plans._staging import pin
 from tstables_spark.plans.tables import load
 
 
@@ -1065,10 +1066,6 @@ _CENSUS_PACK_ID_MAX = 1 << 31
 # two above sf0.1 — conservative on both sides.
 _EDGE_STAGE_PAIRS_MIN = 1_000_000
 
-# Big-graph bucketed edge tables, staged once per (applicationId,
-# sf_dir) — see graph_pagerank's scale note.
-_PR_EDGES_STAGED: dict = {}
-
 
 def _graph_scale_stats(b0: DataFrame, cap: int) -> tuple[int, int]:
     """(distinct users, capped pair-mass upper bound) of the
@@ -1089,6 +1086,26 @@ def _graph_scale_stats(b0: DataFrame, cap: int) -> tuple[int, int]:
         .collect()[0]["p"]
     )
     return n, int(pairs or 0)
+
+
+def _directed_edges(
+    half: DataFrame, big: bool, prefix: str, cache_key: tuple
+) -> DataFrame:
+    """Both directions (src, dst) of the half-edge list (u, v),
+    materialized once for an iterative consumer. Small: pin the HALF
+    list and derive both directions lazily from it (pinning 2|E| is
+    the r11 pagerank OOM). Big: stream the DIRECTED list into a
+    scratch table bucketed by src, reused per (app, ``cache_key``),
+    so every src-keyed groupBy or join reads it with zero exchange."""
+
+    def both(e: DataFrame) -> DataFrame:
+        return e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        )
+
+    if big:
+        return pin(both(half), True, prefix, cache_key=cache_key, bucket_by="src")
+    return both(pin(half, False, prefix))
 
 
 @query("graph_pagerank", oracle=_pagerank_oracle())
@@ -1137,11 +1154,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       simultaneously (~10 GB at 100x; the r11 GCLocker signature,
       re-measured r12 three ways) — so the DIRECTED edge list is
       instead staged ONCE per (app, sf) as a bucketed-by-src scratch
-      table, STREAMED from the derivation into files (a constant-
-      memory local sort + write per task; the join_bucketed
-      discipline). deg then comes off the bucketed scan with zero
-      exchange, and nothing edge-sized ever shuffles, pins, or sits
-      on the heap again.
+      table by ``_staging.stream_pin`` (one shuffle on src at staging
+      time, then one file per bucket, streamed at constant memory).
+      deg then comes off the bucketed scan with zero exchange, and
+      nothing edge-sized shuffles, pins, or sits on the heap again.
     - RANK join, picked on the node count: broadcast under
       _PR_BROADCAST_NODES_MAX (MBs where the r11 shuffle was tens of
       GB; the fixture and bench path at every scale measured), else a
@@ -1173,52 +1189,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_est, pair_est = _graph_scale_stats(b0, cap=256)
     big_nodes = n_est > _PR_BROADCAST_NODES_MAX
     big_edges = pair_est > _EDGE_PIN_PAIRS_MAX
-    edges = cooccurrence_edges(b0, cap=256)
-    if big_edges:
-        # Stage the directed edge list bucketed by src — STREAMED from
-        # the derivation into files, never pinned: a corpus-sized
-        # localCheckpoint builds per-task serialized blocks (64 MB G1
-        # humongous chunks) whose concurrent unroll is exactly the 8g
-        # GCLocker death SCALE.md r11/r12 measured; a bucketed write is
-        # a constant-memory local sort + stream per task. Every
-        # iteration's join then exchanges only the O(nodes) rank side
-        # into this layout — see the scale note. Staged ONCE per
-        # (app, sf) like _nsw_staged_index: the relation is a pure
-        # function of the input, repeated invocations re-walk the
-        # staged files (the steady state the staging exists for), and
-        # re-writing GBs per run exhausted the sweep box's disk.
-        key = (spark.sparkContext.applicationId, sf_dir)
-        tag = _PR_EDGES_STAGED.get(key)
-        if tag is None:
-            import uuid
-
-            from tstables_spark.plans._staging import (
-                register_staged_table,
-                scratch_dir,
-            )
-
-            nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            tag = "pr_edges_" + uuid.uuid4().hex[:8]
-            (
-                edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-                .unionAll(
-                    edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-                )
-                .write.bucketBy(nb, "src")
-                .option("path", scratch_dir(spark, "pr_edges_") + "/de")
-                .mode("overwrite")
-                .saveAsTable(tag)
-            )
-            register_staged_table(spark, tag)
-            _PR_EDGES_STAGED[key] = tag
-        de = spark.table(tag)
-    else:
-        eh = edges.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        de = eh.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            eh.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
+    # Big edges: the directed list streams into a bucketed-by-src
+    # scratch table — never pinned: a corpus-sized localCheckpoint
+    # builds per-task serialized blocks (64 MB G1 humongous chunks)
+    # whose concurrent unroll is the 8g GCLocker death SCALE.md r11/r12
+    # measured. Every iteration's join then exchanges only the O(nodes)
+    # rank side into this layout — see the scale note.
+    de = _directed_edges(
+        cooccurrence_edges(b0, cap=256), big_edges, "pr_edges", cache_key=(sf_dir,)
+    )
     # deg is O(nodes): pin once instead of re-deriving it from a 2|E|
     # scan+shuffle inside every iteration's join leg. In the big-edge
     # branch the agg comes off the bucketed scan with ZERO exchange
@@ -1518,29 +1497,6 @@ def ts_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _edge_pin(
-    e: DataFrame,
-    big: bool,
-    prefix: str,
-    cache_key: tuple | None = None,
-    bucket_by: str | None = None,
-) -> DataFrame:
-    """Materialize a multiply-consumed edge relation. Broadcast-scale
-    graphs pin with a serialized localCheckpoint (fast, memory-first);
-    big graphs (the graph_pagerank node-count knob) STREAM into a
-    scratch parquet table instead — see _staging.stream_pin, which also
-    carries the per-(app, cache_key) reuse (the _PR_EDGES_STAGED
-    discipline; ADVICE r12) and, via ``bucket_by``, the bucketed
-    layout that feeds key-clustered consumers with zero exchange."""
-    if not big:
-        return e.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-    from tstables_spark.plans._staging import stream_pin
-
-    return stream_pin(e, prefix, cache_key=cache_key, bucket_by=bucket_by)
-
-
 def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = None):
     """Degree-ordered oriented triangle census over a PINNED half-edge
     list ``e(u, v)`` (u < v). Returns ``(tri, deg)``: ``tri`` is a
@@ -1550,7 +1506,7 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
     the wedge expansion is O(m^1.5) by the arboricity bound (see
     graph_triangles). Shared by the exact census and the DOULION
     estimator, which runs it on a sampled edge subset. ``big`` routes
-    the internal oriented-edge pin through ``_edge_pin``'s streamed
+    the internal oriented-edge pin through ``_staging.pin``'s streamed
     scratch table instead of a checkpoint.
 
     r17 big-path join strategy (guide §3.1/§8 — use what we know that
@@ -1634,7 +1590,7 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
                 .alias("ord"),
             )
         )
-        oe = _edge_pin(oe, big, "census_oe_pk", cache_key=cache_key)
+        oe = pin(oe, big, "census_oe_pk", cache_key=cache_key)
         a, b = oe.alias("a"), oe.alias("b")
         c = oe.select(
             F.shiftleft(F.col("src"), 32)
@@ -1659,7 +1615,7 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
         .join(dv, "v")
         .select(src.alias("src"), dst.alias("dst"), ddeg.alias("ddeg"))
     )
-    oe = _edge_pin(oe, big, "census_oe", cache_key=cache_key)
+    oe = pin(oe, big, "census_oe", cache_key=cache_key)
     a, b, c = oe.alias("a"), oe.alias("b"), oe.alias("c")
     if big and oe.count() <= _CENSUS_BROADCAST_EDGES_MAX:
         # the count is a parquet count-star over the staged pin
@@ -1796,7 +1752,7 @@ def graph_triangles_approx(
     # bound, one cheap aggregate): above it, both the sampled-edge pin
     # and the census's internal oriented-edge pin become streamed
     # scratch tables — no edge-sized checkpoint blocks on the heap
-    # (see _edge_pin).
+    # (see _staging.pin).
     # Validate the knob BEFORE the scale-stats job — a malformed cut
     # must fail free, not after a corpus aggregate.
     keep = _validate_cut(cut)  # md5-prefix cut 'xx' keeps keep/256 of edges
@@ -1805,10 +1761,9 @@ def graph_triangles_approx(
     # Streamed scratch pins cached per (app, sf_dir, cut) — the sampled
     # edge list and the census's oriented-edge relation are pure
     # functions of (input, cut), so best-of-N bench repetition at 100x
-    # re-walks the staged files instead of re-writing GBs per run (the
-    # _PR_EDGES_STAGED discipline; ADVICE r12).
+    # re-walks the staged files instead of re-writing GBs per run.
     ck = (sf_dir, cut)
-    se = _edge_pin(
+    se = pin(
         _doulion_sample(cooccurrence_edges(b0, cap=256), cut),
         big,
         "doulion_se",
@@ -2101,7 +2056,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     RAISES if max_iter is hit rather than return a non-fixpoint set.
 
     Scale shape: the directed edge relation materializes ONCE via
-    _edge_pin (serialized checkpoint under the pair-mass bound,
+    _directed_edges (serialized checkpoint under the pair-mass bound,
     streamed bucketed-by-src scratch table above it — zero-exchange
     groupBy(src) off the bucketed scan); each round joins it against
     two O(nodes) survivor legs (broadcast under the node bound,
@@ -2147,29 +2102,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         < "10"
     )
-    if big_edges:
-        # Streamed scratch table holds the directed list (the stream
-        # is constant-memory regardless of size; consumers re-scan
-        # files) — the pagerank big-edge discipline via _edge_pin.
-        de = _edge_pin(
-            half.select(
-                F.col("u").alias("src"), F.col("v").alias("dst")
-            ).unionAll(
-                half.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-            ),
-            True,
-            "kcore_de",
-            cache_key=(sf_dir, "kcore", "10"),
-            bucket_by="src",
-        )
-    else:
-        # Pin the HALF list (the _EDGE_PIN_PAIRS_MAX bound is in
-        # half-edges — pinning 2|E| is the r11 pagerank OOM); both
-        # directions derive lazily from the pinned rows.
-        eh = _edge_pin(half, False, "kcore_eh")
-        de = eh.select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ).unionAll(eh.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+    de = _directed_edges(
+        half, big_edges, "kcore_de", cache_key=(sf_dir, "kcore", "10")
+    )
     # k = max(2, 3*med div 4); med = exact ascending-rank median of
     # full-graph degrees. Histogram (O(distinct degree values) rows)
     # + two-phase distributed prefix sum — no single-task window; the

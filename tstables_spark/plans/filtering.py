@@ -490,8 +490,8 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Above this SCAN-ESTIMATED corpus size (compressed parquet bytes from
-# the file index — a driver-side statistic, NO job) lm_kn_score
+# Above this corpus size (compressed parquet bytes of the scanned
+# files — a driver-side file stat, NO job) lm_kn_score
 # stream-pins its bigram-type relation into a scratch table so the
 # model branches read materialized rows instead of re-deriving the
 # type aggregate (a corpus scan each). Below it the aggregate stays
@@ -502,6 +502,19 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counting scan. 64 MB compressed ~ a few hundred MB of text ~
 # tens of millions of bigram occurrences.
 _KN_PIN_BYTES_MIN = 64 * 1024 * 1024
+
+
+def _input_bytes(df: DataFrame) -> int:
+    """On-disk bytes of the files ``df`` scans, from the public
+    ``inputFiles()`` listing (0 for a relation that scans no files).
+    pyarrow resolves the URI scheme, so object stores work too."""
+    from pyarrow import fs
+
+    total = 0
+    for uri in df.inputFiles():
+        filesystem, path = fs.FileSystem.from_uri(uri)
+        total += filesystem.get_file_info(path).size
+    return total
 
 
 @query(
@@ -602,7 +615,7 @@ def lm_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     task ~1.1 s, strictly fewer jobs.
 
     Scale knob (§3.1): above _KN_PIN_BYTES_MIN of compressed corpus
-    (a FREE driver-side file-index statistic — no gate job) the type
+    (a FREE driver-side file stat — no gate job) the type
     relation stream-pins into a scratch table, cutting the nb branch's
     corpus re-scan and giving the windows/scoring join real stats;
     both paths are constant-memory, so the cheap heuristic can only
@@ -621,11 +634,8 @@ def lm_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = base.select("doc_id", F.explode(grams).alias("g")).select(
         "doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2")
     )
-    corpus_bytes = int(
-        d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
     bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    if corpus_bytes > _KN_PIN_BYTES_MIN:
+    if _input_bytes(d) > _KN_PIN_BYTES_MIN:
         from tstables_spark.plans._staging import stream_pin
 
         bg = stream_pin(bg, "kn_bg", cache_key=(sf_dir,))

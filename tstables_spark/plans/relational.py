@@ -28,7 +28,7 @@ from tstables_spark.plans._portable_sql import (
     _qsketch_cells,
     _qsketch_cells_sql,
 )
-from tstables_spark.plans._staging import register_staged_table, scratch_dir
+from tstables_spark.plans._staging import scratch_dir, stage_once
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load, register_views
 
@@ -41,23 +41,19 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "lineitem")
 
 
-_INTERCHANGE: dict[tuple[str, str, str], str] = {}
-
-
 def _staged_interchange(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Stage the nation fixture as CSV / JSON-lines once per (app, sf)."""
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    if key not in _INTERCHANGE:
-        path = scratch_dir(spark, f"src_{fmt}_") + "/nation"
+    def build(_tag: str, base: str) -> str:
+        path = base + "/nation"
         df = load(spark, sf_dir, "nation")
         if fmt == "csv":
             df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
         else:
             df.coalesce(1).write.mode("overwrite").json(path)
-        _INTERCHANGE[key] = path
-    return _INTERCHANGE[key]
+        return path
+
+    return stage_once(spark, f"src_{fmt}", (sf_dir,), build, tables=())
 
 
 @query("scan_csv", oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation")
@@ -168,22 +164,14 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED: dict[tuple[str, str], str] = {}
-
-
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
     """Stage orders/lineitem as bucketed+sorted tables (8 buckets on the
     join key). One-time cost per (app, sf); afterwards any equi-join on
     the bucket key is co-located — no Exchange at all — which is THE
     repeated-big-join strategy at 100 TB (pay the shuffle once at write
     time, never again per query)."""
-    import tempfile
-    import uuid
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED:
-        tag = "b" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "bucketed_")
+    def build(tag: str, base: str) -> str:
         for name, bucket_col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
             (
                 load(spark, sf_dir, name)
@@ -191,12 +179,13 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
                 .sortBy(bucket_col)
                 .option("path", f"{base}/{name}")
                 .mode("overwrite")
-                .saveAsTable(f"{name}_{tag}")
+                .saveAsTable(f"{tag}_{name}")
             )
-        for name in ("orders", "lineitem"):
-            register_staged_table(spark, f"{name}_{tag}")
-        _BUCKETED[key] = tag
-    return _BUCKETED[key]
+        return tag
+
+    return stage_once(
+        spark, "bucketed", (sf_dir,), build, tables=("_orders", "_lineitem")
+    )
 
 
 @query(
@@ -216,8 +205,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps AQE from broadcasting the small local side so the bucketed
     plan shape is the one that would run at scale)."""
     tag = _bucketed_tables(spark, sf_dir)
-    o = spark.table(f"orders_{tag}").hint("merge")
-    li = spark.table(f"lineitem_{tag}")
+    o = spark.table(f"{tag}_orders").hint("merge")
+    li = spark.table(f"{tag}_lineitem")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "inner")
         .groupBy("o_orderkey", "o_orderdate")
