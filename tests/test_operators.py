@@ -2987,3 +2987,23 @@ def test_pair_overlap_packing_boundary_exact(spark):
     )
     got = jaccard_pairs(docs, n=3, threshold=0.9).collect()
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in got] == [(big - 1, big, 1.0)]
+
+
+def test_pack_doc_nsh_guard_bounds(spark):
+    """``_pack_doc_nsh`` packs the largest in-range doc_id (2^43-1, i.e.
+    ``_PACK_MAX_DOC``) exactly, and raises — never wraps — one past
+    either bound and on a negative id."""
+    import pytest as _pytest
+
+    from tstables_spark.operators import dedup
+
+    def packed(doc_id, n_sh):
+        df = spark.createDataFrame([(doc_id, n_sh)], "doc_id long, n_sh long")
+        return df.select(dedup._pack_doc_nsh().alias("p")).collect()[0].p
+
+    top = (1 << 43) - 1
+    assert top == dedup._PACK_MAX_DOC
+    assert packed(top, (1 << 20) - 1) == top * (1 << 20) + (1 << 20) - 1
+    for doc_id, n_sh in ((1 << 43, 0), (-1, 0), (0, 1 << 20)):
+        with _pytest.raises(Exception, match="packing out of range"):
+            packed(doc_id, n_sh)

@@ -930,6 +930,34 @@ def test_staging_owns_app_keyed_state_and_plans_use_no_jdf():
     assert jdf == [], jdf
 
 
+def test_tstable_owns_layout_fs_calls_and_ingest_imports_it_eagerly():
+    """Only tstable.py (series layout) and operators/asof.py (epoch
+    layout) resolve Hadoop filesystems or rename paths; streaming/
+    ingest.py writes and swaps through tstable.py, imported at module
+    level rather than lazily inside a function."""
+    import ast
+    import pathlib
+
+    import tstables_spark
+
+    root = pathlib.Path(tstables_spark.__file__).parent
+    fs_users = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if "getFileSystem(" in p.read_text() or ".rename(" in p.read_text()
+    )
+    assert fs_users == ["operators/asof.py", "tstable.py"], fs_users
+    tree = ast.parse((root / "streaming" / "ingest.py").read_text())
+    lazy = [
+        node.module
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for node in ast.walk(fn)
+        if isinstance(node, ast.ImportFrom) and "tstable" in (node.module or "")
+    ]
+    assert lazy == [], lazy
+
+
 def test_aqe_trade_inverted(spark, sf_dir):
     """r17 verdict #1: the AQE initialPartitionNum trade is INVERTED —
     the engine global is flat (nothing sets the conf; AQE defaults to

@@ -9,6 +9,7 @@ import os
 import tempfile
 from datetime import datetime, timedelta, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from tstables_spark.streaming.ingest import compact_series, ingest_stream
@@ -191,21 +192,19 @@ def test_compact_refuses_leftover_precompact(spark):
     stream_src = spark.readStream.schema("ts timestamp, value double").parquet(src)
     ingest_stream(stream_src, sink, ckpt, watermark="1 hour", available_now=True).awaitTermination(120)
 
-    os.makedirs(sink + "__precompact", exist_ok=True)
     before = spark.read.parquet(sink).count()
-    try:
+    # a crashed swap's backup of one day, left beside the live partition
+    os.makedirs(os.path.join(sink, "date=2024-05-01__precompact"))
+    with pytest.raises(IOError, match=r"leftover .*date=2024-05-01__precompact"):
         compact_series(spark, sink, files_per_day=1)
-        assert False, "expected IOError on leftover __precompact"
-    except Exception:
-        pass
     # original data untouched by the aborted run
     assert spark.read.parquet(sink).count() == before
 
 
 def test_compact_preserves_series_meta(spark, tmp_path):
-    """Whole-table compaction must carry _ts_meta.json across the swap:
-    the series stays openable (r3 fix — the rewrite tree used to drop
-    the catalog file)."""
+    """Whole-table compaction leaves _ts_meta.json in place: the series
+    stays openable with its codec (the per-partition swap never moves
+    the series root)."""
     from datetime import datetime, timedelta, timezone
 
     from pyspark.sql import types as T

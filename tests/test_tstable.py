@@ -81,6 +81,32 @@ def test_min_max_dt(spark, root):
     assert ts.max_dt() == start + timedelta(hours=47)
 
 
+def test_fresh_series_reads_empty_with_declared_columns(spark, root):
+    """A series with no data files yet (only its meta file) reads as 0
+    rows of the declared columns through every read path."""
+    ts = TimeSeriesTable.create(spark, root, "s", SCHEMA)
+    t0 = datetime(2024, 3, 1, tzinfo=UTC)
+    want = [(f.name, f.dataType) for f in SCHEMA.fields]
+    for df in (ts.to_df(), ts.read_range(t0, t0 + timedelta(days=1)), ts.read_at(t0)):
+        assert [(f.name, f.dataType) for f in df.schema.fields] == want
+        assert df.count() == 0
+
+
+def test_removed_series_directory_raises(spark, root):
+    """A series whose directory was removed raises on read instead of
+    reading as an empty series."""
+    from pyspark.errors import AnalysisException
+
+    ts = TimeSeriesTable.create(spark, root, "s", SCHEMA)
+    t0 = datetime(2024, 3, 1, tzinfo=UTC)
+    ts.append(_ticks(spark, t0, 3))
+    shutil.rmtree(ts.path)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        ts.to_df()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        ts.read_range(t0, t0 + timedelta(days=1))
+
+
 def test_timezone_normalization(spark, root):
     """tz-aware non-UTC bounds are normalized to UTC (reference converts
     via pytz; naive input is treated as UTC here)."""
@@ -656,9 +682,9 @@ def test_upsert_cross_date_identity_keeps_both_rows(spark, tmp_path):
 
 
 def test_compact_preserves_versions_and_codec(spark, tmp_path):
-    """Whole-table compaction must carry the _ts_versions registry
-    (version numbering may not restart) and must rewrite with the
-    series' persisted codec, not a hardcoded default."""
+    """Whole-table compaction keeps the _ts_versions registry (version
+    numbering may not restart) and rewrites with the series' persisted
+    codec, not a hardcoded default."""
     from datetime import datetime, timedelta, timezone
     import glob
 

@@ -44,32 +44,25 @@ def _load_all() -> None:
         [
             # reference identity, pinned
             "ts_range_scan", "ts_min_max",
-            # changed staging or pin path (stage_once, pin,
-            # _directed_edges, minhash pins, CC round alias, kn gate)
-            "scan_csv", "scan_json", "join_bucketed",
-            "join_asof_presorted", "join_asof_forward_presorted",
-            "join_asof_nearest_presorted", "join_asof_tolerance_presorted",
-            "join_asof_epochs", "join_asof_multi_presorted",
-            "ts_epoch_lifecycle", "ts_epoch_recovery",
-            "sim_nsw_staged", "sim_recall",
-            "stream_append_windows", "stream_asof", "stream_bloom",
-            "stream_cms", "stream_dedup", "stream_enrich",
-            "stream_heavy_hitters", "stream_ingest", "stream_join",
-            "stream_kll_gate", "stream_ohlc", "stream_pattern",
-            "stream_qsketch", "stream_sliding", "stream_stateful",
-            "stream_tumbling",
-            "graph_pagerank", "graph_kcore", "graph_triangles",
-            "graph_triangles_approx", "graph_triangles_gate",
-            "dedup_minhash", "dedup_clusters", "dedup_cluster_sizes",
-            "dedup_embed_clusters", "lm_kn_score",
-            # leftover from the previous rotation
-            "assoc_rules",
+            # changed storage path (tstable.py's shared layout writer
+            # and per-partition swap; streaming/ingest.py's compaction)
+            "ts_create_append", "ts_compact", "ts_upsert",
+            "ts_schema_evolve", "ts_partitions", "ts_retention_purge",
+            "ts_time_travel", "ts_catalog", "ts_multi_series_align",
+            "ts_read_at", "stream_ingest", "stream_upsert",
             # oldest evidence backfill to the cut
-            "ts_create_append", "sink_parquet_partitioned", "ts_compact",
-            "ts_upsert", "ts_schema_evolve", "ts_partitions",
-            "ts_cross_rank", "ts_retention_purge",
+            "ts_twap", "ts_watermark_lateness", "ts_xcorr_lags",
+            "ts_seasonal_decompose", "ts_motif", "sim_knn_graph",
+            "sink_orc_roundtrip", "sim_topk", "multimodal_dedup",
+            "win_zscore", "fn_array", "fn_map", "fn_json",
+            "udf_scalar_pandas", "udaf_grouped_agg", "sim_nsw",
+            "scan_parquet", "project_filter", "join_broadcast",
+            "join_shuffle", "join_salted", "set_except", "sample_hash",
+            "split_train_test", "vocab_topk", "dedup_simhash_pairs",
+            "doc_top_terms", "embed_centroid", "dedup_exact",
+            "dedup_editdist", "text_stats", "token_count", "lang_id",
+            "quality_score", "doc_fingerprint", "dedup_prefix",
         ]
     )
-
 
 _load_all()

@@ -130,8 +130,9 @@ def ts_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two files per day partition — the small-file state a micro-batched
     stream leaves behind), run the OPTIMIZE-style rewrite
     (streaming/ingest.py::compact_series — coalesces each day to one
-    ts-sorted file via a single (date, bucket) shuffle, swaps it in
-    with checked renames), then read a range back. The ORACLE is the
+    ts-sorted file through tstable.py's layout writer and swaps each
+    day in with tstable.swap_date_partitions, the per-partition
+    protocol upsert also uses), then read a range back. The ORACLE is the
     plain range select on the fixture: the hash match proves compaction
     is lossless and the layout contract (pruned, inclusive range reads)
     survives the rewrite."""

@@ -47,7 +47,7 @@ from __future__ import annotations
 import json
 import os
 import re
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,6 +109,29 @@ def _fs_list_names(spark: SparkSession, path: str) -> list[str]:
     if not fs.exists(jpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
+
+
+def _fs_delete(spark: SparkSession, path: str) -> None:
+    """Recursive delete; a missing path is not an error."""
+    fs, jpath, _ = _jfs(spark, path)
+    fs.delete(jpath, True)
+
+
+def _fs_relative_files(spark: SparkSession, root: str) -> list[str]:
+    """Every file under ``root``, as a path relative to it, from ONE
+    recursive listing. The root is qualified through the FileSystem
+    first: listFiles returns Hadoop-normalized URIs, so a root spelled
+    e.g. file:///x (vs the normalized file:/x) would never prefix-match
+    and every file would look missing."""
+    fs, jroot, _ = _jfs(spark, root)
+    base = fs.makeQualified(jroot).toString().rstrip("/") + "/"
+    out = []
+    it = fs.listFiles(jroot, True)
+    while it.hasNext():
+        p = it.next().getPath().toString()
+        if p.startswith(base):
+            out.append(p[len(base):])
+    return out
 
 
 def _fs_read_text(spark: SparkSession, path: str) -> str:
@@ -204,6 +227,109 @@ def _fs_rename_overwrite(spark: SparkSession, src: str, dst: str) -> None:
     opts = gw.new_array(Rename, 1)
     opts[0] = Rename.OVERWRITE
     fc.rename(jsrc, jdst, opts)
+
+
+# -- the layout: one writer, one partition swap -------------------------------
+
+def _write_layout(
+    df: DataFrame,
+    path: str,
+    mode: str,
+    compression: str,
+    max_records_per_file: int | None,
+    files_per_day: int,
+) -> None:
+    """Write ``df`` (which carries the ``date`` column) in the series
+    layout: ``date=`` partitions, rows sorted by ts within every file.
+
+    The shuffle key is ``date`` alone at ``files_per_day == 1`` (each
+    day's rows land in one task, so one file per day per write) and
+    ``(date, ts-hash bucket)`` otherwise, so a heavy day spreads over N
+    writer tasks — the layout contract is only "sorted by ts within each
+    file", which any file count satisfies. Sort by (date, ts), not just
+    ts: the dynamic-partition writer requires task rows ordered by the
+    partition column and inserts its own UNSTABLE sort on ``date`` when
+    they are not, which would destroy the in-file ts order. Codec and
+    file-size cap are the series' A9 knobs from create()."""
+    key = [F.col(DATE_COL)]
+    if files_per_day > 1:
+        key.append(F.pmod(F.xxhash64(TS_COL), F.lit(files_per_day)))
+    writer = (
+        df.repartition(*key)
+        .sortWithinPartitions(DATE_COL, TS_COL)
+        .write.mode(mode)
+        .partitionBy(DATE_COL)
+        .option("compression", compression)
+    )
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
+    writer.parquet(path)
+
+
+def swap_date_partitions(spark: SparkSession, path: str, tmp: str) -> None:
+    """Swap every ``date=`` dir of ``tmp`` into ``path``, one partition
+    at a time, with the crash-safe rename protocol: the live dir is
+    renamed to ``<dir>__precompact``, the rewritten dir renamed in, then
+    the backup dropped. A leftover ``__precompact`` dir from a crashed
+    run aborts before any destructive step. The series root itself is
+    never renamed, so ``_ts_meta.json`` and ``_ts_versions`` stay put
+    and readers never see the series path missing — only the partition
+    being swapped, for the span of two renames.
+
+    Also removes the streaming sink's ``_spark_metadata`` commit log: it
+    enumerates pre-rewrite files, and a reader that trusts it would look
+    for files the rewrite replaced. MUST run with the writing stream
+    stopped (or between availableNow runs): a still-active FileStreamSink
+    would recreate the log at its next micro-batch listing ONLY that
+    batch's files, after which batch readers silently see a near-empty
+    table."""
+    live = _fs_list_names(spark, path)
+    leftover = [n for n in live if n.endswith("__precompact")]
+    if leftover:
+        raise IOError(
+            f"leftover {path}/{leftover[0]} from a crashed rewrite; "
+            "resolve it manually before re-running"
+        )
+    _fs_delete(spark, f"{path}/_spark_metadata")
+    for name in _fs_list_names(spark, tmp):
+        if not name.startswith(f"{DATE_COL}="):
+            continue
+        part, old = f"{path}/{name}", f"{path}/{name}__precompact"
+        if name in live:
+            _fs_rename_checked(spark, part, old)
+        try:
+            _fs_rename_checked(spark, f"{tmp}/{name}", part)
+        except Exception:
+            # BEST-EFFORT roll back so the partition never vanishes from
+            # the table — but never let a failing rollback mask the
+            # original error.
+            try:
+                if name in live:
+                    _fs_rename_checked(spark, old, part)
+            except Exception:
+                pass
+            raise
+        _fs_delete(spark, old)
+
+
+def _rewrite_dates(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    compression: str,
+    max_records_per_file: int | None,
+    files_per_day: int,
+) -> None:
+    """Replace the date partitions ``df`` holds rows for: write them to
+    a side tree in the series layout, swap each one in, and drop the
+    side tree whether or not the write and swap succeed. Shared by
+    upsert and compaction; cost is O(rewritten days), never O(table)."""
+    tmp = path + "__rewriting"
+    try:
+        _write_layout(df, tmp, "overwrite", compression, max_records_per_file, files_per_day)
+        swap_date_partitions(spark, path, tmp)
+    finally:
+        _fs_delete(spark, tmp)
 
 
 class TimeSeriesTable:
@@ -343,10 +469,7 @@ class TimeSeriesTable:
         tasks — the layout contract is only "sorted by ts within each
         file", which any file count satisfies.
         """
-        got = {f.name: f.dataType for f in df.schema.fields}
-        want = {f.name: f.dataType for f in self.schema.fields}
-        if got != want:
-            raise TimeSeriesTableError(f"schema mismatch: got {got}, want {want}")
+        self._check_schema(df)
         # ONE validation job for both checks (null timestamps + batch
         # min) instead of separate count and min jobs: an expensive
         # upstream plan is evaluated twice total (validate + write), not
@@ -371,29 +494,14 @@ class TimeSeriesTable:
                     raise TimeSeriesTableError(
                         f"append-only order violated: batch min {new_min} < current max {cur}"
                     )
-        dated = df.withColumn(DATE_COL, F.to_date(F.col(TS_COL)))
-        if files_per_day > 1:
-            dated = dated.repartition(
-                F.col(DATE_COL), F.pmod(F.xxhash64(TS_COL), F.lit(files_per_day))
-            )
-        else:
-            dated = dated.repartition(DATE_COL)
-        # Sort by (date, ts), not just ts: the dynamic-partition
-        # writer requires task rows ordered by the partition column
-        # and inserts its own UNSTABLE sort on `date` when they are
-        # not — which silently destroys the in-file ts order the
-        # whole layout contract rests on. Sorting by the full prefix
-        # satisfies the writer's requirement so no extra sort runs.
-        writer = (
-            dated.sortWithinPartitions(DATE_COL, TS_COL)
-            .write.mode("append")
-            .partitionBy(DATE_COL)
-            # A9 knobs from create(): per-series codec + file-size cap
-            .option("compression", self.compression)
+        _write_layout(
+            df.withColumn(DATE_COL, F.to_date(F.col(TS_COL))),
+            self.path,
+            "append",
+            self.compression,
+            self.max_records_per_file,
+            files_per_day,
         )
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
-        writer.parquet(self.path)
 
     # -- A3+: upsert (late-data correction merge) ---------------------------
     def upsert(self, df: DataFrame, keys: list[str] | None = None) -> None:
@@ -411,8 +519,8 @@ class TimeSeriesTable:
         combined with a partial-agg ``max(struct(__src, ...))`` keyed on
         identity (batch wins over table; ties within a side resolve by
         the row's own ordering — deterministic). The merged days are
-        rewritten to the side and swapped in with the same crash-safe
-        per-partition rename protocol as ``compact_series``. Cost is
+        rewritten to the side and swapped in by ``_rewrite_dates``, the
+        crash-safe per-partition protocol compaction also uses. Cost is
         O(touched days' data), not O(table) — at 100 TB a day's
         correction never rewrites years of history.
 
@@ -424,15 +532,13 @@ class TimeSeriesTable:
         touched set. Corrections that genuinely re-time a row across
         days are a delete+insert.
         """
-        got = {f.name: f.dataType for f in df.schema.fields}
-        want = {f.name: f.dataType for f in self.schema.fields}
-        if got != want:
-            raise TimeSeriesTableError(f"schema mismatch: got {got}, want {want}")
+        self._check_schema(df)
+        cols = self.schema.fieldNames()
         keys = list(keys) if keys else [TS_COL]
-        unknown = [k for k in keys if k not in want]
+        unknown = [k for k in keys if k not in cols]
         if unknown:
             raise TimeSeriesTableError(f"upsert keys not in schema: {unknown}")
-        reserved = {"__src", "__m"} & set(want)
+        reserved = {"__src", "__m"} & set(cols)
         if reserved:
             raise TimeSeriesTableError(
                 f"upsert reserves column names {sorted(reserved)}; rename them in the schema"
@@ -447,7 +553,6 @@ class TimeSeriesTable:
                 f"upsert cannot merge non-orderable (map-typed) columns: {unorderable}"
             )
 
-        cols = [f.name for f in self.schema.fields]
         value_cols = [c for c in cols if c not in keys]
         dated_new = df.withColumn(DATE_COL, F.to_date(F.col(TS_COL)))
         # One job does double duty: the distinct-dates collect also
@@ -476,27 +581,9 @@ class TimeSeriesTable:
             .select(*cols, DATE_COL)
         )
 
-        tmp = self.path + "__upserting"
-        writer = (
-            merged.repartition(DATE_COL)
-            .sortWithinPartitions(DATE_COL, TS_COL)
-            .write.mode("overwrite")
-            .partitionBy(DATE_COL)
-            .option("compression", self.compression)
+        _rewrite_dates(
+            self.spark, self.path, merged, self.compression, self.max_records_per_file, 1
         )
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
-        writer.parquet(tmp)
-
-        from tstables_spark.streaming.ingest import swap_date_partitions
-
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        fs = hpath(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        try:
-            swap_date_partitions(self.spark, self.path, tmp, date_strs)
-        finally:
-            fs.delete(hpath(tmp), True)
 
     # -- A2+: schema evolution ----------------------------------------------
     def evolve(self, new_schema: T.StructType) -> None:
@@ -555,19 +642,24 @@ class TimeSeriesTable:
         _fs_rename_overwrite(self.spark, tmp, meta_path)
         self.schema = new_schema
 
-    # -- internal: read with pruning ---------------------------------------
+    # -- internal: schema check and read with pruning -----------------------
+    def _check_schema(self, df: DataFrame) -> None:
+        got = {f.name: f.dataType for f in df.schema.fields}
+        want = {f.name: f.dataType for f in self.schema.fields}
+        if got != want:
+            raise TimeSeriesTableError(f"schema mismatch: got {got}, want {want}")
+
+    def _read_schema(self) -> T.StructType:
+        """The declared schema plus the derived ``date`` partition column.
+        A series with no data files yet reads as 0 rows of it; a missing
+        series directory raises (PATH_NOT_FOUND) instead of reading as
+        empty."""
+        return T.StructType(
+            list(self.schema.fields) + [T.StructField(DATE_COL, T.DateType())]
+        )
+
     def _df(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(
-                T.StructType(
-                    list(self.schema.fields) + [T.StructField(DATE_COL, T.DateType())]
-                )
-            ).parquet(self.path)
-        except Exception:
-            # empty series: no parquet files yet
-            return self.spark.createDataFrame([], self.schema).withColumn(
-                DATE_COL, F.lit(None).cast(T.DateType())
-            )
+        return self.spark.read.schema(self._read_schema()).parquet(self.path)
 
     def to_df(self) -> DataFrame:
         """Whole series as a DataFrame (without the derived date column)."""
@@ -692,21 +784,12 @@ class TimeSeriesTable:
         at = _as_utc(at)
         names = self._projected_names(columns, "read_at")
         df = self._df()
-        for d in sorted(
-            (x for x in self._partition_dates() if x <= at.date()), reverse=True
-        ):
-            hit = (
-                df.where((F.col(DATE_COL) == F.lit(d)) & (F.col(TS_COL) <= F.lit(at)))
-                .agg(F.max(TS_COL))
-                .collect()[0][0]
-            )
-            if hit is not None:
-                return (
-                    df.where(
-                        (F.col(DATE_COL) == F.lit(d)) & (F.col(TS_COL) == F.lit(hit))
-                    ).select(*names)
-                )
-        return self.to_df().select(*names).limit(0)
+        hit = self._edge_dt(df, reverse=True, at=at)
+        if hit is None:
+            return df.select(*names).limit(0)
+        return df.where(
+            (F.col(DATE_COL) == F.lit(hit.date())) & (F.col(TS_COL) == F.lit(hit))
+        ).select(*names)
 
     # -- A5/A6: min/max -----------------------------------------------------
     def _partition_dates(self) -> list:
@@ -714,36 +797,31 @@ class TimeSeriesTable:
         names only — a pure metadata operation at any scale (the
         reference's y/m/d group enumeration). Uses the Hadoop FileSystem
         API so the same code works on HDFS/S3 on a real cluster."""
-        from datetime import date as _date
-
-        try:
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            names = [s.getPath().getName() for s in fs.listStatus(jpath)]
-        except Exception:
-            try:
-                names = os.listdir(self.path)
-            except OSError:
-                return []
         out = []
-        for n in names:
+        for n in _fs_list_names(self.spark, self.path):
             if n.startswith(f"{DATE_COL}="):
                 try:
-                    out.append(_date.fromisoformat(n.split("=", 1)[1]))
+                    out.append(date.fromisoformat(n.split("=", 1)[1]))
                 except ValueError:
                     pass
         return sorted(out)
 
-    def _edge_dt(self, reverse: bool) -> datetime | None:
+    def _edge_dt(
+        self, df: DataFrame, reverse: bool, at: datetime | None = None
+    ) -> datetime | None:
         """Reference semantics (``TsTable.min_dt``/``max_dt``): walk day
-        partitions from the edge inward until one holds data. Each probe
-        scans ONE date partition — with parquet aggregate pushdown the
-        min/max is answered from row-group footers — so the cost is
-        independent of total table size."""
+        partitions of ``df`` (the series frame) from the edge inward —
+        or, given ``at``, from ``at``'s day backwards over rows
+        at-or-before it — until one holds data. Each probe scans ONE date
+        partition — with parquet aggregate pushdown the min/max is
+        answered from row-group footers — so the cost is independent of
+        total table size."""
         agg = F.max(TS_COL) if reverse else F.min(TS_COL)
-        df = self._df()
-        for d in sorted(self._partition_dates(), reverse=reverse):
+        days = self._partition_dates()
+        if at is not None:
+            days = [d for d in days if d <= at.date()]
+            df = df.where(F.col(TS_COL) <= F.lit(at))
+        for d in sorted(days, reverse=reverse):
             val = df.where(F.col(DATE_COL) == F.lit(d)).agg(agg).collect()[0][0]
             if val is not None:
                 # collect() yields naive datetimes in session TZ (UTC,
@@ -754,11 +832,11 @@ class TimeSeriesTable:
 
     def min_dt(self) -> datetime | None:
         """Earliest timestamp (edge-partition walk, not a full scan)."""
-        return self._edge_dt(reverse=False)
+        return self._edge_dt(self._df(), reverse=False)
 
     def max_dt(self) -> datetime | None:
         """Latest timestamp (edge-partition walk, not a full scan)."""
-        return self._edge_dt(reverse=True)
+        return self._edge_dt(self._df(), reverse=True)
 
     # -- lifecycle: retention purge -----------------------------------------
     def purge_before(self, cutoff) -> list:
@@ -779,21 +857,13 @@ class TimeSeriesTable:
         Snapshots recorded before a purge refer to deleted files — purge
         is this layout's VACUUM, and invalidates older versions
         (documented in ``snapshot``)."""
-        from datetime import date as _date
-        from datetime import datetime as _datetime
-
-        if isinstance(cutoff, _datetime):
+        if isinstance(cutoff, datetime):
             cutoff = _as_utc(cutoff).date()
-        if not isinstance(cutoff, _date):
+        if not isinstance(cutoff, date):
             raise TimeSeriesTableError(f"cutoff must be a date/datetime, got {type(cutoff)}")
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        fs = hpath(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        purged = []
-        for d in self._partition_dates():
-            if d < cutoff:
-                fs.delete(hpath(os.path.join(self.path, f"{DATE_COL}={d}")), True)
-                purged.append(d)
+        purged = [d for d in self._partition_dates() if d < cutoff]
+        for d in purged:
+            _fs_delete(self.spark, os.path.join(self.path, f"{DATE_COL}={d}"))
         return purged
 
     # -- lifecycle: snapshots / time travel ---------------------------------
@@ -816,19 +886,11 @@ class TimeSeriesTable:
         compaction/purge/upsert delete files, so older snapshots
         spanning rewritten days become unreadable — the standard
         vacuum trade every snapshotting table format makes."""
-        # Qualify the root exactly as read_version does: listFiles
-        # returns Hadoop-normalized URIs, so substring-matching the raw
-        # self.path spelling (e.g. file:///x vs file:/x) would reject
-        # every file and silently record an EMPTY manifest.
-        manifest = []
-        fs, jroot, _ = _jfs(self.spark, self.path)
-        base = fs.makeQualified(jroot).toString().rstrip("/") + "/"
-        it = fs.listFiles(jroot, True)
-        while it.hasNext():
-            p = it.next().getPath().toString()
-            rel = p[len(base):] if p.startswith(base) else p
-            if rel.startswith(f"{DATE_COL}=") and rel.endswith(".parquet"):
-                manifest.append(rel)
+        manifest = [
+            rel
+            for rel in _fs_relative_files(self.spark, self.path)
+            if rel.startswith(f"{DATE_COL}=") and rel.endswith(".parquet")
+        ]
         _fs_mkdirs(self.spark, self._versions_dir())
         existing = self.versions()
         v = (existing[-1] + 1) if existing else 1
@@ -867,30 +929,15 @@ class TimeSeriesTable:
         # ONE recursive listing (the same sweep snapshot() does) instead
         # of a per-file exists probe — O(files) sequential RPCs against a
         # remote store would add seconds of pure metadata latency.
-        # Qualify the root through the FileSystem first (the
-        # _fs_rename_overwrite pattern): listFiles returns fully
-        # qualified URIs in Hadoop's normalized spelling, so a root
-        # given as e.g. file:///tmp (vs the normalized file:/tmp) would
-        # never prefix-match and every file would look missing.
-        live = set()
-        fs, jroot, _ = _jfs(self.spark, self.path)
-        base = fs.makeQualified(jroot).toString().rstrip("/") + "/"
-        it = fs.listFiles(jroot, True)
-        while it.hasNext():
-            pth = it.next().getPath().toString()
-            if pth.startswith(base):
-                live.add(pth[len(base):])
+        live = set(_fs_relative_files(self.spark, self.path))
         missing = [rel for rel in files if rel not in live]
         if missing:
             raise TimeSeriesTableError(
                 f"snapshot v{version} references files removed by a later "
                 f"compact/purge/upsert (vacuum invalidates old versions): {missing[:3]}"
             )
-        read_schema = T.StructType(
-            list(self.schema.fields) + [T.StructField(DATE_COL, T.DateType())]
-        )
         df = (
-            self.spark.read.schema(read_schema)
+            self.spark.read.schema(self._read_schema())
             .option("basePath", self.path)
             .parquet(*[os.path.join(self.path, rel) for rel in files])
         )
